@@ -50,6 +50,27 @@ object Densify {
         (col("_r._ts").as(tsCol) +: dataCols.map(c => col(s"_r.$c"))): _*)
   }
 
+  /** Array form of [[apply]] for one island, rows `[from, until)` of
+    * the ascending `ts`: the grid timestamps and, per grid row, the
+    * source row it came from (-1 for a fill row, whose data is null).
+    * Each gap wider than `stepUnits` gets the fill rows
+    * `prev + step, …, ts - step`. */
+  def grid(ts: Array[Long], from: Int, until: Int,
+      stepUnits: Long): (Array[Long], Array[Int]) = {
+    val gts = Array.newBuilder[Long]
+    val src = Array.newBuilder[Int]
+    var i = from
+    while (i < until) {
+      if (i > from) {
+        var t = ts(i - 1) + stepUnits
+        while (t <= ts(i) - stepUnits) { gts += t; src += -1; t += stepUnits }
+      }
+      gts += ts(i); src += i
+      i += 1
+    }
+    (gts.result(), src.result())
+  }
+
   /** DuckDB CTE chain mirroring [[apply]]; exposes `dz_final`. */
   def sqlStages(
       from: String,

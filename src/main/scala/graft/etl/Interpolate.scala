@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.model.Doubles
+
 /** F3 — positional linear interpolation of nulls ("fill_na",
   * reference stockdata/indicators.py:151-163).
   *
@@ -50,6 +52,30 @@ object Interpolate {
       case c => col(c)
     }
     staged.select(out.toIndexedSeq: _*)
+  }
+
+  /** Array form of [[apply]] for one column of one island, in place:
+    * a null between two values at rows `a < i < b` becomes
+    * `x(a) + (x(b) - x(a)) * ((i - a) / (b - a))`, evaluated in that
+    * order; leading nulls take the first value, trailing nulls the last.
+    * A column with no value stays all null. */
+  def fill(x: Doubles): Unit = {
+    val n = x.length
+    var a = -1 // last value at or before i
+    var i = 0
+    while (i < n) {
+      if (!x.isNull(i)) {
+        var j = a + 1
+        while (j < i) {
+          if (a < 0) x.set(j, x.v(i))
+          else x.set(j, x.v(a) + (x.v(i) - x.v(a)) * ((j - a).toDouble / (i - a).toDouble))
+          j += 1
+        }
+        a = i
+      }
+      i += 1
+    }
+    if (a >= 0) { var j = a + 1; while (j < n) { x.set(j, x.v(a)); j += 1 } }
   }
 
   /** DuckDB CTE chain mirroring [[apply]]; exposes `ip_final`. */

@@ -60,6 +60,26 @@ object Sessionize {
     staged.drop("_gap", "_brk", "_isl_raw", "_isl_n")
   }
 
+  /** Array form of [[apply]] for one series: `ts(0 until n)` sorted
+    * ascending. Returns the surviving islands as `[start, end)` row
+    * ranges, flattened `(s0, e0, s1, e1, …)`; island `k` is the pair at
+    * `2k`, numbered densely in time order like [[apply]]. A gap not in
+    * `allowedGaps` (a 0 gap between duplicated timestamps included)
+    * starts a new island; islands of one row are dropped. */
+  def islands(ts: Array[Long], n: Int, allowedGaps: Array[Long]): Array[Int] = {
+    val out = Array.newBuilder[Int]
+    var s = 0
+    var i = 1
+    while (i <= n) {
+      if (i == n || !allowedGaps.contains(ts(i) - ts(i - 1))) {
+        if (i - s >= 2) { out += s; out += i }
+        s = i
+      }
+      i += 1
+    }
+    out.result()
+  }
+
   /** DuckDB CTE chain mirroring [[apply]]; exposes `sz_final` =
     * input columns + island + sub_ticker. */
   def sqlStages(

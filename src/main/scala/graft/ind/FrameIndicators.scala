@@ -1,10 +1,11 @@
 package graft.ind
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
-import graft.model.IndicatorConfig
+import graft.model.{Doubles, IndicatorConfig}
 
 /** Group W-F frame-based indicators (SURVEY.md §2): ROCP, MOM, MFI,
   * ULTOSC, AROONOSC, STOCHF, PPO — all expressible as built-in Spark
@@ -128,6 +129,197 @@ object FrameIndicators {
         try_divide(col("sma_fast") - col("sma_slow"), col("sma_slow"))).as("ppo"),
       when(col("rn") >= sokFrom, col("sok_raw")).as("sok"),
       when(col("rn") >= sokFrom, col("sok_raw") - col("sod")).as("sok_hist"))): _*)
+  }
+
+  /** Array form of [[addAll]] for one series (an island), rows sorted by
+    * time: the output columns `rocp_1..rocp_5, mfi, ultosc, aroonosc,
+    * ppo, sok, sok_hist` by name, null where [[addAll]] gives null.
+    *
+    * It evaluates every formula as Spark evaluates [[addAll]], so the
+    * results are bit-identical: each sliding frame is re-summed oldest
+    * to newest for every row (`SlidingWindowFunctionFrame`), aggregates
+    * skip nulls, `avg` is sum / count of the non-null rows, `try_divide`
+    * gives null on a zero divisor, and comparisons, `greatest`/`least`
+    * and `max`/`min` use Spark's double ordering (NaN above every value,
+    * NaN = NaN, -0.0 = 0.0; ties keep the earlier operand).
+    */
+  def series(price: Doubles, close: Doubles, high: Doubles, low: Doubles,
+      volume: Doubles, cfg: IndicatorConfig = IndicatorConfig()): Map[String, Doubles] = {
+    val n = price.length
+    val prevC = lagged(close, 1)
+    val tp = mapped(zipped(zipped(high, low)(_ + _), close)(_ + _))(_ / 3.0)
+    val dtp = zipped(tp, lagged(tp, 1))(_ - _)
+    val mf = zipped(tp, volume)(_ * _)
+    val bp = Doubles.nulls(n)
+    val tr = Doubles.nulls(n)
+    val posMf = Doubles.nulls(n)
+    val negMf = Doubles.nulls(n)
+    var i = 0
+    while (i < n) {
+      if (!prevC.isNull(i)) {
+        val pc = prevC.v(i)
+        val least = if (low.isNull(i) || cmp(pc, low.v(i)) < 0) pc else low.v(i)
+        if (!close.isNull(i)) bp.set(i, close.v(i) - least)
+        val greatest = if (high.isNull(i) || cmp(pc, high.v(i)) > 0) pc else high.v(i)
+        tr.set(i, greatest - least)
+      }
+      if (!dtp.isNull(i)) {
+        val d = dtp.v(i)
+        if (cmp(d, 0.0) > 0) { if (!mf.isNull(i)) posMf.set(i, mf.v(i)) } else posMf.set(i, 0.0)
+        if (cmp(d, 0.0) < 0) { if (!mf.isNull(i)) negMf.set(i, mf.v(i)) } else negMf.set(i, 0.0)
+      }
+      i += 1
+    }
+
+    val mfiP = cfg.mfiPeriod
+    val (u1, u2, u3) = (cfg.ultoscPeriod1, cfg.ultoscPeriod2, cfg.ultoscPeriod3)
+    val ar = cfg.aroonoscPeriod
+    val k5 = cfg.stochFastK
+    val sokFrom = k5 + cfg.stochFastD - 1
+    val posSum = frameSum(posMf, mfiP)
+    val negSum = frameSum(negMf, mfiP)
+    val (bp1, tr1) = (frameSum(bp, u1), frameSum(tr, u1))
+    val (bp2, tr2) = (frameSum(bp, u2), frameSum(tr, u2))
+    val (bp3, tr3) = (frameSum(bp, u3), frameSum(tr, u3))
+    val hiRn = frameArgMax(high, ar + 1)
+    val loRn = frameArgMax(mapped(low)(x => -x), ar + 1)
+    val hh = frameExtreme(high, k5, 1)
+    val ll = frameExtreme(low, k5, -1)
+    val smaFast = frameAvg(price, cfg.ppoFast)
+    val smaSlow = frameAvg(price, cfg.ppoSlow)
+    val sokRaw = from(k5, tryDiv(zipped(close, ll)(_ - _), zipped(hh, ll)(_ - _)))
+    val sod = frameAvg(sokRaw, cfg.stochFastD)
+
+    val rocps = (1 until 6).map { k =>
+      val prev = lagged(price, k)
+      s"rocp_$k" -> tryDiv(zipped(price, prev)(_ - _), prev)
+    }
+    val mfi = from(mfiP + 1, tryDiv(posSum, zipped(posSum, negSum)(_ + _)))
+    val ultosc = from(u3 + 1, mapped(zipped(zipped(
+      mapped(tryDiv(bp1, tr1))(4.0 * _), mapped(tryDiv(bp2, tr2))(2.0 * _))(_ + _),
+      tryDiv(bp3, tr3))(_ + _))(_ / 7.0))
+    val aroonosc = Doubles.nulls(n)
+    i = ar
+    while (i < n) { aroonosc.set(i, (hiRn(i) - loRn(i)).toDouble / ar.toDouble); i += 1 }
+    val ppo = from(cfg.ppoSlow, tryDiv(zipped(smaFast, smaSlow)(_ - _), smaSlow))
+    val sok = from(sokFrom, sokRaw)
+    val sokHist = from(sokFrom, zipped(sokRaw, sod)(_ - _))
+    (rocps ++ Seq("mfi" -> mfi, "ultosc" -> ultosc, "aroonosc" -> aroonosc, "ppo" -> ppo,
+      "sok" -> sok, "sok_hist" -> sokHist)).toMap
+  }
+
+  /** Spark's double ordering (`SQLOrderingUtil.compareDoubles`). */
+  private def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
+
+  private def mapped(a: Doubles)(f: Double => Double): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) { if (!a.isNull(i)) out.set(i, f(a.v(i))); i += 1 }
+    out
+  }
+
+  private def zipped(a: Doubles, b: Doubles)(f: (Double, Double) => Double): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) {
+      if (!a.isNull(i) && !b.isNull(i)) out.set(i, f(a.v(i), b.v(i)))
+      i += 1
+    }
+    out
+  }
+
+  /** `lag(a, k)`. */
+  private def lagged(a: Doubles, k: Int): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = k
+    while (i < a.length) { if (!a.isNull(i - k)) out.set(i, a.v(i - k)); i += 1 }
+    out
+  }
+
+  /** `when(rn >= fromRn, a)`, `rn` 1-based. */
+  private def from(fromRn: Int, a: Doubles): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = math.max(0, fromRn - 1)
+    while (i < a.length) { if (!a.isNull(i)) out.set(i, a.v(i)); i += 1 }
+    out
+  }
+
+  /** `try_divide(a, b)`: null when either side is null or `b == 0`. */
+  private def tryDiv(a: Doubles, b: Doubles): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) {
+      if (!a.isNull(i) && !b.isNull(i) && b.v(i) != 0.0) out.set(i, a.v(i) / b.v(i))
+      i += 1
+    }
+    out
+  }
+
+  /** `sum(a)` over rows `[i - w + 1, i]`, summed from the oldest row. */
+  private def frameSum(a: Doubles, w: Int): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) {
+      var s = 0.0
+      var any = false
+      var j = math.max(0, i - w + 1)
+      while (j <= i) { if (!a.isNull(j)) { s += a.v(j); any = true }; j += 1 }
+      if (any) out.set(i, s)
+      i += 1
+    }
+    out
+  }
+
+  /** `avg(a)` over rows `[i - w + 1, i]`: the sum of the non-null rows
+    * from the oldest, divided by their count. */
+  private def frameAvg(a: Doubles, w: Int): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) {
+      var s = 0.0
+      var c = 0L
+      var j = math.max(0, i - w + 1)
+      while (j <= i) { if (!a.isNull(j)) { s += a.v(j); c += 1 }; j += 1 }
+      if (c > 0) out.set(i, s / c.toDouble)
+      i += 1
+    }
+    out
+  }
+
+  /** `max(a)` (`sign` 1) or `min(a)` (`sign` -1) over rows
+    * `[i - w + 1, i]`; a tie keeps the older row. */
+  private def frameExtreme(a: Doubles, w: Int, sign: Int): Doubles = {
+    val out = Doubles.nulls(a.length)
+    var i = 0
+    while (i < a.length) {
+      var j = math.max(0, i - w + 1)
+      while (j <= i) {
+        if (!a.isNull(j) && (out.isNull(i) || cmp(a.v(j), out.v(i)) * sign > 0))
+          out.set(i, a.v(j))
+        j += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** `max(struct(a, rn)).rn` over rows `[i - w + 1, i]`: the 1-based row
+    * of the largest value, nulls lowest, ties to the most recent row. */
+  private def frameArgMax(a: Doubles, w: Int): Array[Int] = {
+    val out = new Array[Int](a.length)
+    var i = 0
+    while (i < a.length) {
+      var best = math.max(0, i - w + 1)
+      var j = best + 1
+      while (j <= i) {
+        val ge = a.isNull(best) || (!a.isNull(j) && cmp(a.v(j), a.v(best)) >= 0)
+        if (ge) best = j
+        j += 1
+      }
+      out(i) = best + 1
+      i += 1
+    }
+    out
   }
 
   /** DuckDB CTE chain mirroring [[addAll]] formula-for-formula.

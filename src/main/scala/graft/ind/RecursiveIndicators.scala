@@ -1,6 +1,7 @@
 package graft.ind
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
 
@@ -53,8 +54,13 @@ object RecursiveIndicators {
     * families. Returns n rows of [rsi, cmo, macd_hist, adx, adx_hist]
     * as boxed doubles, null during each indicator's warm-up region.
     *
-    * Formula evaluation order mirrors [[sqlStages]] token-for-token so
-    * the DuckDB oracle is bit-comparable (after round-6).
+    * Arithmetic and comparisons are those of the `graft_ind_w` window
+    * function ([[graft.functions.IndicatorPackWindow]]), so the two agree
+    * bit for bit: Spark's double ordering in every comparison and
+    * `greatest` (NaN above every value), and the fast EMA seeded with
+    * `(Σ rows 0..25 − Σ rows 0..13) / 12`. [[sqlStages]] seeds it with
+    * the 12-row average instead, so the DuckDB oracle agrees to ~1e-12,
+    * far inside the 6-dp rounding it is compared at.
     */
   def scan(
       price: Array[Double],
@@ -81,8 +87,8 @@ object RecursiveIndicators {
     while (i < n) {
       // --- RSI / CMO (close_column series — indicators.py:330,412) ---
       val delta = price(i) - price(i - 1)
-      val g = math.max(delta, 0.0)
-      val l = math.max(-delta, 0.0)
+      val g = if (gt(delta, 0.0)) delta else 0.0
+      val l = if (gt(0.0, delta)) -delta else 0.0
       if (i <= p) {
         gsum += g; lsum += l
         if (i == p) { avgg = gsum / p; avgl = lsum / p }
@@ -98,12 +104,14 @@ object RecursiveIndicators {
 
       // --- MACDFIX histogram ---
       if (i == SlowP - 1) {
-        var sS = 0.0; var j = 0
-        while (j <= SlowP - 1) { sS += price(j); j += 1 }
+        var sS = 0.0; var s14 = 0.0; var j = 0
+        while (j <= SlowP - 1) {
+          sS += price(j)
+          if (j < SlowP - FastP) s14 += price(j)
+          j += 1
+        }
         emas = sS / SlowP
-        var sF = 0.0; j = SlowP - FastP
-        while (j <= SlowP - 1) { sF += price(j); j += 1 }
-        emaf = sF / FastP
+        emaf = (sS - s14) / FastP
       } else if (i > SlowP - 1) {
         emas = (price(i) - emas) * KSlow + emas
         emaf = (price(i) - emaf) * KFast + emaf
@@ -120,10 +128,13 @@ object RecursiveIndicators {
       // --- ADX / ±DI (high/low/unadjusted close — indicators.py:465-477) ---
       val dp = high(i) - high(i - 1)
       val dm = low(i - 1) - low(i)
-      val pdm = if (dp > dm && dp > 0.0) dp else 0.0
-      val mdm = if (dm > dp && dm > 0.0) dm else 0.0
-      val tr = math.max(high(i) - low(i),
-        math.max(math.abs(high(i) - close(i - 1)), math.abs(low(i) - close(i - 1))))
+      val pdm = if (gt(dp, dm) && gt(dp, 0.0)) dp else 0.0
+      val mdm = if (gt(dm, dp) && gt(dm, 0.0)) dm else 0.0
+      var tr = high(i) - low(i)
+      val trH = math.abs(high(i) - close(i - 1))
+      if (gt(trH, tr)) tr = trH
+      val trL = math.abs(low(i) - close(i - 1))
+      if (gt(trL, tr)) tr = trL
       if (i <= q - 1) {
         sTR += tr; sPDM += pdm; sMDM += mdm
       } else {
@@ -146,6 +157,9 @@ object RecursiveIndicators {
     }
     out
   }
+
+  /** `a > b` in Spark's double ordering. */
+  private def gt(a: Double, b: Double): Boolean = SQLOrderingUtil.compareDoubles(a, b) > 0
 
   /** Appends [[outputColumns]] to `df`, preserving all input columns.
     *

@@ -51,8 +51,21 @@ object StreamingPipeline {
   private def closeNsOf(ds: String): Long =
     MarketCalendar.marketOpenCloseNanos(LocalDate.parse(ds))._2
 
+  /** One bar per `window_start` of `held ++ incoming`, the latest
+    * delivery winning: a bar from a later micro-batch replaces the held
+    * copy, and of the copies within one micro-batch the last one seen is
+    * kept. */
+  private def latestPerBar(held: List[RawBarEvent],
+      incoming: Iterator[RawBarEvent]): List[RawBarEvent] = {
+    val byTs = scala.collection.mutable.LinkedHashMap.empty[Long, RawBarEvent]
+    (held.iterator ++ incoming).foreach(b => byTs(b.window_start) = b)
+    byTs.values.toList
+  }
+
   /** Assemble complete (ticker, day) bar groups. Emits each group once,
     * when the watermark passes the day's market close + `slackMinutes`.
+    * A bar delivered again before the watermark passes its day is kept
+    * once, as [[latestPerBar]] says.
     */
   def assembleDays(
       bars: Dataset[RawBarEvent],
@@ -80,8 +93,8 @@ object StreamingPipeline {
           } else {
             val incoming = rows.map { case (t, v, o, c, h, l, ac, ws, _) =>
               RawBarEvent(t, v, o, c, h, l, ac, ws)
-            }.toList
-            state.update(incoming ::: state.getOption.getOrElse(Nil))
+            }
+            state.update(latestPerBar(state.getOption.getOrElse(Nil), incoming))
             // fire once the watermark passes market close + slack; clamp
             // to watermark+1 — an after-hours bar (not watermark-dropped)
             // can arrive after the watermark already passed its day's
@@ -115,6 +128,7 @@ object StreamingPipeline {
       sink: (String, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = bars.sparkSession
     import spark.implicits._
+    IndicatorPipeline.checkConfig(cfg)
     assembleDays(bars).writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[DayBars], _: Long) =>

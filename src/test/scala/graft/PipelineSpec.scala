@@ -150,15 +150,12 @@ class PipelineSpec extends SparkSpec {
       (0 until 5).foreach { j =>
         val exp = want(i)(j)
         val act = if (r.isNullAt(j + 1)) null else r.getDouble(j + 1)
-        // macd_hist (col 2) carries the kernel's documented deliberate
-        // arithmetic difference — the fast EMA seed is (Σ₂₆ − Σ₁₄)/12,
-        // not a re-sum of rows 15..26 — so it matches to ~1e-12, far
-        // below the 1e-6 rounding both engines apply; the four
-        // period-threaded outputs are bit-identical.
-        val tol = if (j == 2) 1e-9 else 0.0
+        // all five outputs, macd_hist included, are bit-identical: the
+        // scan seeds the fast EMA with (Σ₂₆ − Σ₁₄)/12 like the window
         assert((exp == null && act == null) ||
           (exp != null && act != null &&
-            math.abs(exp.asInstanceOf[Double] - act.asInstanceOf[Double]) <= tol),
+            java.lang.Double.doubleToRawLongBits(exp.asInstanceOf[Double]) ==
+              java.lang.Double.doubleToRawLongBits(act.asInstanceOf[Double])),
           s"row $i col $j: scan=$exp window=$act")
       }
     }

@@ -869,6 +869,34 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("bars re-delivered before the watermark are kept once: output as if delivered once") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[RawBarEvent]
+    val results = scala.collection.concurrent.TrieMap[String, Array[Row]]()
+    val q = StreamingPipeline.run(stream.toDS()) { (ds, df) =>
+      results(ds) = df.collect()
+    }
+    try {
+      stream.addData(day1Bars :+ day1Bars(5))   // a copy inside the same micro-batch
+      q.processAllAvailable()
+      stream.addData(day1Bars.slice(10, 20))   // copies in a later micro-batch
+      q.processAllAvailable()
+      stream.addData(pusher(1))
+      q.processAllAvailable()
+      stream.addData(pusher(2))
+      q.processAllAvailable()
+      val streamed = results("2024-03-05").map(_.toString).sorted
+      val once = spark.createDataFrame(
+        java.util.Arrays.asList(day1Bars.map(b => Row(b.ticker, b.volume,
+          b.open, b.close, b.high, b.low, b.adj_close, b.window_start)): _*),
+        Schemas.rawBars)
+      val batch = IndicatorPipeline.run(once, day1).collect().map(_.toString).sorted
+      assert(batch.nonEmpty)
+      assert(streamed.toSeq == batch.toSeq)
+    } finally q.stop()
+  }
+
   test("streaming dedup: one row per key within the watermark horizon") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
